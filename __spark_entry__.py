@@ -114,14 +114,14 @@ _GT_EDGES_CACHE: dict[str, DataFrame] = {}
 
 
 def _graph(spark: SparkSession, sf_dir: str):
-    # cache=False: lazy per-label views beat materializing the generic
+    # lazy per-label slices beat materializing the generic
     # property-graph shape — Catalyst collapses properties[k] back to the
     # raw parquet columns (pushdown) and prunes union branches by label,
     # so each query scans only the tables it touches. Caching the unioned
     # MapType frames costs minutes (generic-path columnar build) and
     # defeats predicate pushdown.
     if sf_dir not in _GRAPH_CACHE:
-        _GRAPH_CACHE[sf_dir] = build_graph(spark, sf_dir, cache=False)
+        _GRAPH_CACHE[sf_dir] = build_graph(spark, sf_dir)
     return _GRAPH_CACHE[sf_dir]
 
 

@@ -656,7 +656,7 @@ def main() -> None:
     try:
         from graph_loom_spark.io.tpch_graph import build_graph
 
-        build_graph(spark, sf_dir, cache=False).edges.count()
+        build_graph(spark, sf_dir).edges.count()
     except Exception as e:
         print(f"bench projection warm-up warning: {e}", file=sys.stderr, flush=True)
     _warm_iterative(spark)
@@ -683,7 +683,7 @@ def main() -> None:
             fresh.read.parquet(f"{sf_dir}/region.parquet").count()
             from graph_loom_spark.io.tpch_graph import build_graph
 
-            build_graph(fresh, sf_dir, cache=False).edges.count()
+            build_graph(fresh, sf_dir).edges.count()
         except Exception as e:
             print(f"bench graph warm-up warning: {e}", file=sys.stderr, flush=True)
         _warm_iterative(fresh)

@@ -47,6 +47,7 @@ from graph_loom_spark.graph import (
     PropertyGraph,
     _free_intermediates,
     _tracked_checkpoint,
+    local_rows,
 )
 from graph_loom_spark.ids import assign_uuid7_ids
 
@@ -93,10 +94,14 @@ class _Binding:
     must still preserve row multiplicity, reference WITH semantics).
 
     ``labels`` records the statically-known label of each bound variable
-    (from the pattern that bound it). It is a pure optimization hint:
-    joins back to nodes/edges pre-filter by it, which lets Catalyst prune
-    the per-label union branches down to single table scans instead of
-    scanning every source table. ``None`` = unknown, scan all."""
+    (from the pattern that bound it). It is a contract: when not None,
+    it is the label of every id bound to the variable. Reads use it to
+    join back against that label's slice only (a single table scan for
+    a projection), and mutations pass it to ``PropertyGraph`` as
+    ``known_label`` so they rewrite only that slice. Any clause that
+    could break it must update it: ``SET v:L`` sets ``v``'s label and
+    forgets the labels of variables that may share ids with ``v``.
+    ``None`` = unknown, scan all."""
 
     def __init__(self, df: DataFrame, kinds: dict[str, str]):
         self.df = df
@@ -156,7 +161,7 @@ class CypherExecutor:
         return self._dump_bindings(b)
 
     def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+        return local_rows(self.spark, [], RESULT_SCHEMA)
 
     # ---------------------------------------------------------- matching
     def _nodes_matching(self, np: ast.NodePattern, params: dict[str, str] | None) -> DataFrame:
@@ -750,7 +755,7 @@ class CypherExecutor:
             F.lit(typ).alias("label"),
             props_map_lit(props).alias("properties"),
         )
-        self.graph.add_edges_df(new_edges, check_endpoints=False)
+        self.graph.add_edges_df(new_edges, check_endpoints=False, known_label=typ)
         if p.rel.var is not None:
             if p.rel.var in b.kinds:
                 df = df.drop(_vcol(p.rel.var))
@@ -774,7 +779,7 @@ class CypherExecutor:
         typ = p.rel.typ or DEFAULT_LABEL
         props = {k: resolve_param(v, params) for k, v in p.rel.props.items()}
 
-        existing = self.graph.edges.filter(F.col("label") == typ)
+        existing = self.graph.edges_for_label(typ)
         for k, v in props.items():
             existing = existing.filter(F.col("properties")[k] == v)
         # deterministic stand-in for the reference's arbitrary first match
@@ -791,6 +796,7 @@ class CypherExecutor:
                     "id", "src", "dst", F.lit(typ).alias("label"), props_map_lit(props).alias("properties")
                 ),
                 check_endpoints=False,
+                known_label=typ,
             )
         if p.rel.var is not None:
             lookup = existing_min.select("src", "dst", F.col("__rid").alias("__mid"))
@@ -848,9 +854,11 @@ class CypherExecutor:
                 lambda x, y: x.unionByName(y),
                 [b.df.select(_c(_vcol(v)).alias("id")) for v in rel_vars],
             ).distinct().localCheckpoint(eager=True)
-            self.graph.delete_edges_by_ids(rel_ids)
+            self.graph.delete_edges_by_ids(rel_ids, known_label=_common_label(b, rel_vars))
         if node_ids is not None:
-            self.graph.delete_nodes_by_ids(node_ids, detach=True)
+            self.graph.delete_nodes_by_ids(
+                node_ids, detach=True, known_label=_common_label(b, node_vars)
+            )
 
     def _exec_set(self, b: _Binding, cl: ast.SetClause) -> None:
         """SET var.prop = literal | var:NewLabel (cypher_spec.rs:1251-1297).
@@ -868,8 +876,17 @@ class CypherExecutor:
                 if kind is None:
                     continue
                 ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
-                self.graph.set_label(kind, ids, label)
-                b.labels[var] = label  # hint follows the label replacement
+                old = b.labels.get(var)
+                self.graph.set_label(kind, ids, label, known_label=old)
+                # keep the labels contract: a variable of the same kind
+                # whose ids may overlap var's (same label, or either one
+                # unknown) may now hold relabeled ids
+                for other, other_kind in b.kinds.items():
+                    if other != var and other_kind == kind and (
+                        old is None or b.labels.get(other) in (None, old)
+                    ):
+                        b.labels[other] = None
+                b.labels[var] = label
                 continue
             if "=" in s:
                 eq = s.find("=")
@@ -887,7 +904,7 @@ class CypherExecutor:
                 if kind is None:
                     continue
                 ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
-                self.graph.upsert_property(kind, ids, prop, value)
+                self.graph.upsert_property(kind, ids, prop, value, known_label=b.labels.get(var))
 
     def _exec_remove(self, b: _Binding, cl: ast.RemoveClause) -> None:
         for raw in cl.items:
@@ -900,7 +917,13 @@ class CypherExecutor:
             if kind is None:
                 continue
             ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
-            self.graph.remove_property(kind, ids, prop)
+            self.graph.remove_property(kind, ids, prop, known_label=b.labels.get(var))
+
+
+def _common_label(b: _Binding, vars_: list[str]) -> str | None:
+    """The label shared by all of ``vars_``, or None if unknown/mixed."""
+    labels = {b.labels.get(v) for v in vars_}
+    return labels.pop() if len(labels) == 1 else None
 
 
 def compare_cols(lhs: Column, rhs: Column, op: str) -> Column:

@@ -138,13 +138,19 @@ def _props_map(df: DataFrame):
     return F.create_map(*pairs)
 
 
-def build_graph(spark: SparkSession, sf_dir: str, cache: bool = True) -> PropertyGraph:
+def build_graph(spark: SparkSession, sf_dir: str, cache: bool = False) -> PropertyGraph:
     """Project the star schema into canonical ``nodes``/``edges`` frames.
 
     Pure narrow transformations (no shuffle); each per-table frame keeps
-    its parquet partitioning. ``cache=True`` persists the unioned frames
-    for repeated queries within one session.
+    its parquet partitioning. The per-label frames become the graph's
+    label slices: a ``:Label`` pattern compiles against one parquet scan
+    instead of the pruned 7-branch union (cuts per-query Catalyst
+    planning ~3×), and a mutation rewrites only the slice it touches
+    (see :class:`PropertyGraph`). ``cache`` must be False; it is
+    accepted so that callers passing ``cache=False`` keep working.
     """
+    if cache:
+        raise ValueError("build_graph(cache=True) is no longer supported")
     tables = load_tables(
         spark, sf_dir, [t for t in TABLES if t not in ("events", "documents", "embeddings")]
     )
@@ -157,10 +163,6 @@ def build_graph(spark: SparkSession, sf_dir: str, cache: bool = True) -> Propert
             F.lit(label).alias("label"),
             _props_map(df).alias("properties"),
         )
-    parts = list(node_parts.values())
-    nodes = parts[0]
-    for p in parts[1:]:
-        nodes = nodes.unionByName(p)
 
     edge_parts: dict[str, DataFrame] = {}
     for elabel, table, sp, sk, dp, dk in _EDGE_SPECS:
@@ -181,20 +183,4 @@ def build_graph(spark: SparkSession, sf_dir: str, cache: bool = True) -> Propert
         edge_parts[elabel] = (
             part if elabel not in edge_parts else edge_parts[elabel].unionByName(part)
         )
-    eparts = list(edge_parts.values())
-    edges = eparts[0]
-    for p in eparts[1:]:
-        edges = edges.unionByName(p)
-
-    if cache:
-        nodes = nodes.cache()
-        edges = edges.cache()
-    g = PropertyGraph(spark, nodes, edges)
-    if not cache:
-        # per-label single-scan slices: a `:Label` pattern compiles
-        # against one parquet scan instead of the pruned 7-branch union
-        # (cuts per-query Catalyst planning ~3×; see PropertyGraph
-        # docstring). Skipped when caching — the cached union IS the
-        # fast path then, and the slices would bypass it.
-        g.register_label_sources(node_parts, edge_parts)
-    return g
+    return PropertyGraph(spark, node_slices=node_parts, edge_slices=edge_parts)

@@ -20,11 +20,14 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from graph_loom_spark.cypher.ast import CypherError
-from graph_loom_spark.graph import GraphConsistencyError, PropertyGraph
+from graph_loom_spark.graph import GraphConsistencyError, PropertyGraph, local_rows
 from graph_loom_spark.ids import assign_uuid7_ids
 from graph_loom_spark.result import ResultRow
+
+_ID_SCHEMA = T.StructType([T.StructField("id", T.StringType(), False)])
 
 LegacyResult = tuple[list[ResultRow], int, int, bool]  # rows, nodes, rels, mutated
 
@@ -273,14 +276,14 @@ def exec_match_rel(graph: PropertyGraph, rest: str) -> LegacyResult:
 
 def exec_delete_node(graph: PropertyGraph, rest: str) -> int:
     nid = _parse_uuid(rest)
-    ids = graph.spark.createDataFrame([(nid,)], "id string")
+    ids = local_rows(graph.spark, [(nid,)], _ID_SCHEMA)
     removed, _ = graph.delete_nodes_by_ids(ids, detach=True)  # primitive cascades
     return removed
 
 
 def exec_delete_rel(graph: PropertyGraph, rest: str) -> int:
     rid = _parse_uuid(rest)
-    ids = graph.spark.createDataFrame([(rid,)], "id string")
+    ids = local_rows(graph.spark, [(rid,)], _ID_SCHEMA)
     return graph.delete_edges_by_ids(ids)
 
 
@@ -430,7 +433,7 @@ def exec_cypher_match_merge(graph: PropertyGraph, stmt: str) -> LegacyResult:
         raise CypherError("MERGE variable order does not match MATCH variables")
 
     cand = sel.distinct()
-    existing = graph.edges.filter(F.col("label") == rel_type).select("src", "dst")
+    existing = graph.edges_for_label(rel_type).select("src", "dst")
     new = cand.join(existing, ["src", "dst"], "left_anti")
     created, n_new = assign_uuid7_ids(new, "id")  # distributed mint (ids.py)
     rows: list[ResultRow] = []
@@ -442,6 +445,7 @@ def exec_cypher_match_merge(graph: PropertyGraph, stmt: str) -> LegacyResult:
                 "id", "src", "dst", F.lit(rel_type).alias("label"), props_map_lit({}).alias("properties")
             ),
             check_endpoints=False,
+            known_label=rel_type,
         )
         rows = [
             ResultRow.rel(r["id"], r["src"], r["dst"], rel_type, {}) for r in created.collect()

@@ -64,27 +64,39 @@ class QueryServer:
     def _submit(self, query: str, params: dict[str, str], log: bool):
         def run():
             with self._lock:
-                if log:
-                    outcome = self.session.execute_and_log(
-                        query, params, log_dir=self.log_dir
-                    )
-                else:
-                    outcome = self.session.execute(query, params)
-                if getattr(outcome, "mutated", False):
-                    self._dirty = True
-                return outcome
+                # dirty follows the graph's mutation counter, not the
+                # outcome's prefix-based ``mutated`` flag (which misses
+                # MATCH..SET and friends); a statement that fails after
+                # an earlier one mutated still leaves the graph dirty
+                before = self._graph_version()
+                try:
+                    if log:
+                        return self.session.execute_and_log(
+                            query, params, log_dir=self.log_dir
+                        )
+                    return self.session.execute(query, params)
+                finally:
+                    if self._graph_version() != before:
+                        self._dirty = True
 
         return self._pool.submit(run)
+
+    def _graph_version(self):
+        # any session exposing execute()/execute_and_log() can be served;
+        # one without a PropertyGraph never marks the server dirty
+        graph = getattr(self.session, "graph", None)
+        return getattr(graph, "mutations", None)
 
     # ----------------------------------------------------------- autosave
     def start_autosave(self, path: str, interval_s: float = 5.0) -> threading.Thread:
         """Background autosave (reference main.rs:248-265: the headless
         server snapshots the graph every 5 s when dirty): a daemon
         thread that, each tick, writes a versioned snapshot via
-        ``PropertyGraph.save(path, versioned=True)`` IF a mutating query
-        ran since the last save — idle sessions write nothing. The save
-        runs under the single-writer lock, so it never races a mutation;
-        a failed save keeps the dirty flag so the next tick retries."""
+        ``PropertyGraph.save(path, versioned=True)`` IF the graph's
+        mutation counter moved since the last save — idle sessions write
+        nothing. The save runs under the single-writer lock, so it never
+        races a mutation; a failed save keeps the dirty flag so the next
+        tick retries."""
         if self._autosave_stop is not None:
             raise RuntimeError("autosave already running")
         stop = threading.Event()

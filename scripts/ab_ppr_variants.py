@@ -95,7 +95,7 @@ for r in range(RUNS):
         # fresh topology frames per run (the entry memo path would hide
         # the id-construction cost differently per slot; build once per
         # run so every variant pays the identical input cost)
-        g0 = build_graph(spark, SF_DIR, cache=False)
+        g0 = build_graph(spark, SF_DIR)
         from graph_loom_spark.graph import PropertyGraph
 
         n = g0.nodes.select("id").localCheckpoint(eager=True)

@@ -26,7 +26,7 @@ spark.range(100_000).selectExpr("sum(id)").collect()
 spark.read.parquet(f"{sf_dir}/region.parquet").count()
 from graph_loom_spark.io.tpch_graph import build_graph
 
-build_graph(spark, sf_dir, cache=False).edges.count()
+build_graph(spark, sf_dir).edges.count()
 bench._drop_persisted_blocks(spark)
 
 for name in ["graph_triangles", "graph_bfs", "graph_degrees", "graph_kcore", "graph_pagerank"]:

@@ -74,7 +74,7 @@ except Exception as e:
 try:
     from graph_loom_spark.io.tpch_graph import build_graph
 
-    build_graph(spark, SF_DIR, cache=False).edges.count()
+    build_graph(spark, SF_DIR).edges.count()
 except Exception as e:
     print(f"graph warmup warning: {e}", file=sys.stderr)
 bench._warm_iterative(spark)

@@ -36,7 +36,7 @@ COPIES = 10
 
 
 def _derive(spark) -> None:
-    g = build_graph(spark, SF1, cache=False)
+    g = build_graph(spark, SF1)
     copies = spark.range(COPIES).select(F.col("id").alias("__c"))
     tag = F.concat(F.lit("c"), F.col("__c").cast("string"), F.lit(":"))
     (
@@ -70,7 +70,7 @@ def main() -> None:
         print("deriving 10x graph ...", flush=True)
         _derive(spark)
 
-    g1 = build_graph(spark, SF1, cache=False)
+    g1 = build_graph(spark, SF1)
     g10 = PropertyGraph(
         spark,
         nodes=spark.read.parquet(f"{DERIVED}/nodes.parquet"),

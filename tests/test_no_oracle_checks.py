@@ -30,7 +30,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _graph(spark):
-    return build_graph(spark, SF_DIR, cache=False)
+    return build_graph(spark, SF_DIR)
 
 
 # ------------------------------------------------------------- components
@@ -71,7 +71,7 @@ def test_components_match_union_find_sf001(spark):
     exercises the contraction loop across multiple levels with 10× the
     sf0.001 data, so the unwind path is validated on a chain of per-level
     maps rather than the near-trivial small-graph case."""
-    g = build_graph(spark, "/root/testdata/sf0.01", cache=False)
+    g = build_graph(spark, "/root/testdata/sf0.01")
     node_ids = [r["id"] for r in g.nodes.select("id").collect()]
     edges = [(r["src"], r["dst"]) for r in g.edges.select("src", "dst").collect()]
 

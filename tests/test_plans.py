@@ -79,7 +79,7 @@ def test_layout_step_com_is_single_row_broadcast_not_cartesian(spark):
     from graph_loom_spark import analytics
     from graph_loom_spark.io.tpch_graph import build_graph
 
-    g = build_graph(spark, SF_DIR, cache=False)
+    g = build_graph(spark, SF_DIR)
     pos = g.nodes.select(
         "id", F.lit(0.0).alias("x"), F.lit(0.0).alias("y"),
         F.lit(0.0).alias("vx"), F.lit(0.0).alias("vy"),

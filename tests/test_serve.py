@@ -123,3 +123,51 @@ def test_autosave_on_mutation_and_idle(spark, tmp_path):
     finally:
         qs.stop_autosave()
         httpd.shutdown()
+
+
+def _wait_for_snapshot(save_dir, deadline, done):
+    """Newest complete versioned snapshot dir under ``save_dir`` for
+    which ``done(vdir)`` holds, or None at the deadline."""
+    import os
+    import time
+
+    from graph_loom_spark.graph import PropertyGraph as PG
+
+    while time.time() < deadline:
+        for v in reversed(PG.list_versions(save_dir)):
+            vdir = os.path.join(save_dir, "versions", v)
+            if os.path.exists(os.path.join(vdir, "edges", "_SUCCESS")) and done(vdir):
+                return vdir
+        time.sleep(0.2)
+    return None
+
+
+def test_autosave_after_match_set(spark, tmp_path):
+    """A MATCH..SET answers ``mutated: false`` (the reference's
+    prefix-based flag) but still changes the graph, so autosave must
+    snapshot it: dirtiness follows the graph's mutation counter."""
+    import time
+
+    from graph_loom_spark.graph import PropertyGraph as PG
+
+    sess = CypherSession(PropertyGraph.empty(spark))
+    sess.execute('CREATE (p:Person {name:"Trinity"})')
+    qs = QueryServer(sess, timeout_s=120, log_dir=str(tmp_path / "logs"))
+    httpd = qs.serve(port=0)
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    save_dir = str(tmp_path / "snap")
+    qs.start_autosave(save_dir, interval_s=0.3)
+    try:
+        code, out = _post(
+            base, {"query": 'MATCH (p:Person {name:"Trinity"}) SET p.x = "1"'}, key=None
+        )
+        assert code == 200 and out["mutated"] is False
+
+        def has_x(vdir):
+            rows = PG.load(spark, vdir).nodes.collect()
+            return [r["properties"].get("x") for r in rows] == ["1"]
+
+        assert _wait_for_snapshot(save_dir, time.time() + 30, has_x) is not None
+    finally:
+        qs.stop_autosave()
+        httpd.shutdown()
