@@ -5,7 +5,10 @@ DataFrame with one id column per bound pattern variable (`v_<name>`),
 mirroring the reference's ``rows: Vec<HashMap<var, NodeId|RelId>>``
 (src/gql/cypher_spec.rs:751-753) — but each expansion compiles to
 DataFrame joins/filters that Catalyst optimizes and executes across the
-cluster, instead of the reference's row-at-a-time nested loops.
+cluster, instead of the reference's row-at-a-time nested loops. A node
+variable whose row a later WHERE / ORDER BY / RETURN reads also carries
+that row (label + properties) from the scan that bound it, so the
+statement reads each label slice once (see ``_Binding``).
 
 Variable kinds (node vs relationship) are static per column, so the
 reference's per-row ``matches!(Val::NodeId…)`` checks become compile-time
@@ -84,6 +87,14 @@ def _vcol(var: str) -> str:
     return f"v_{var}"
 
 
+def _lcol(var: str) -> str:
+    return f"l_{var}"
+
+
+def _pcol(var: str) -> str:
+    return f"p_{var}"
+
+
 def _c(name: str) -> Column:
     return F.col(name)
 
@@ -101,16 +112,54 @@ class _Binding:
     ``known_label`` so they rewrite only that slice. Any clause that
     could break it must update it: ``SET v:L`` sets ``v``'s label and
     forgets the labels of variables that may share ids with ``v``.
-    ``None`` = unknown, scan all."""
+    ``None`` = unknown, scan all.
+
+    ``carried`` names the node variables whose row rides in the frame:
+    besides ``v_<var>`` it holds ``l_<var>``/``p_<var>``, the label and
+    properties of the row the binding scan found, and WHERE, ORDER BY
+    and RETURN read these instead of joining the label slice again. A
+    variable is carried when a node-only pattern or a label/property-
+    constrained one-hop endpoint binds it (the endpoint's semi-join
+    becomes an inner join) and a later WHERE, ORDER BY or RETURN of the
+    statement reads its row before any mutation (decided up front,
+    :func:`_row_reads`; carrying rows nobody reads only inflates join
+    inputs). Carried columns are dropped by every mutation clause, all
+    of them, so reads after a write see the rewritten slices; by a
+    var-length right variable, whose traversal overwrites the binding;
+    and by WITH for the variables it does not keep.
+
+    The binding starts as the one-row unit; the first pattern's frame
+    then becomes the binding itself (plus ``__1``) instead of being
+    cross-joined with it (:meth:`product`)."""
 
     def __init__(self, df: DataFrame, kinds: dict[str, str]):
         self.df = df
         self.kinds = kinds
         self.labels: dict[str, str | None] = {}
+        self.carried: set[str] = set()
+        self._unit: DataFrame | None = None
 
     @classmethod
     def unit(cls, spark) -> "_Binding":
-        return cls(spark.range(1).select(F.lit(1).alias("__1")), {})
+        b = cls(spark.range(1).select(F.lit(1).alias("__1")), {})
+        b._unit = b.df
+        return b
+
+    def product(self, frame: DataFrame) -> DataFrame:
+        """Every binding row paired with every ``frame`` row. The unit
+        binding (by identity: an emptied binding or a WITH of no
+        variables has no kinds either, but is no longer the unit) is
+        seeded with ``frame`` directly, saving a nested-loop join."""
+        if self.df is self._unit:
+            return frame.select(F.lit(1).alias("__1"), "*")
+        return self.df.crossJoin(frame)
+
+    def drop_carried(self, vars_: set[str] | None = None) -> None:
+        """Drop the carried row columns of ``vars_`` (default: all)."""
+        gone = self.carried if vars_ is None else self.carried & vars_
+        if gone:
+            self.df = self.df.drop(*[c for v in gone for c in (_lcol(v), _pcol(v))])
+            self.carried = self.carried - gone
 
     def empty(self) -> None:
         self.df = self.df.limit(0)
@@ -135,13 +184,23 @@ class CypherExecutor:
         return self.graph.edges_for_label(lbl)
 
     # ------------------------------------------------------------- entry
-    def execute(self, statement: str, params: dict[str, str] | None = None) -> DataFrame:
+    def execute(
+        self,
+        statement: str,
+        params: dict[str, str] | None = None,
+        clauses: list[ast.Clause] | None = None,
+    ) -> DataFrame:
+        """Run one statement; ``clauses`` is its parse when the caller
+        already has it (the router parses to classify the statement)."""
         params = params or {}
-        clauses = parse(statement)
+        if clauses is None:
+            clauses = parse(statement)
         b = _Binding.unit(self.spark)
-        for cl in clauses:
+        for cl, reads in zip(clauses, _row_reads(clauses)):
+            if isinstance(cl, _MUTATIONS):
+                b.drop_carried()
             if isinstance(cl, ast.Match):
-                self._exec_match(b, cl, params)
+                self._exec_match(b, cl, params, reads)
             elif isinstance(cl, ast.Where):
                 self._exec_where(b, cl.raw, params)
             elif isinstance(cl, ast.With):
@@ -180,21 +239,27 @@ class CypherExecutor:
             df = df.filter(F.col("properties")[k] == v)
         return df
 
-    def _exec_match(self, b: _Binding, cl: ast.Match, params: dict[str, str]) -> None:
+    def _exec_match(
+        self, b: _Binding, cl: ast.Match, params: dict[str, str], reads: set[str]
+    ) -> None:
+        """``reads``: variables whose row a later clause reads (carried
+        if a scan binds them here)."""
         # OPTIONAL flag intentionally ignored (reference cypher_spec.rs:761)
         for p in cl.patterns:
             if isinstance(p, ast.NodeOnly):
-                self._expand_node(b, p.node, params)
+                self._expand_node(b, p.node, params, reads)
             elif p.rel.is_var_length:
                 self._expand_var_length(b, p)
             else:
-                self._expand_one_hop(b, p, params)
+                self._expand_one_hop(b, p, params, reads)
 
-    def _expand_node(self, b: _Binding, np: ast.NodePattern, params: dict[str, str]) -> None:
+    def _expand_node(
+        self, b: _Binding, np: ast.NodePattern, params: dict[str, str], reads: set[str]
+    ) -> None:
         matches = self._nodes_matching(np, params)
         if np.var is None:
             # anonymous: multiply rows by match count, bind nothing
-            b.df = b.df.crossJoin(matches.select(F.lit(1).alias("__m"))).drop("__m")
+            b.df = b.product(matches.select(F.lit(1).alias("__m"))).drop("__m")
             return
         if np.var in b.kinds:
             if b.kinds[np.var] != "node":
@@ -204,28 +269,42 @@ class CypherExecutor:
                 matches.select(F.col("id").alias(_vcol(np.var))), _vcol(np.var), "left_semi"
             )
             return
-        b.df = b.df.crossJoin(matches.select(F.col("id").alias(_vcol(np.var))))
+        cols = [F.col("id").alias(_vcol(np.var))]
+        if np.var in reads:
+            cols += [F.col("label").alias(_lcol(np.var)), F.col("properties").alias(_pcol(np.var))]
+            b.carried.add(np.var)
+        b.df = b.product(matches.select(*cols))
         b.kinds[np.var] = "node"
         b.labels[np.var] = np.label
 
-    def _one_hop_triples(self, p: ast.PathPattern, params: dict[str, str]) -> DataFrame:
+    def _one_hop_triples(
+        self, p: ast.PathPattern, params: dict[str, str], carry_a: bool, carry_b: bool
+    ) -> DataFrame:
         """All (__a, __r, __b) matches of a 1-hop path (J1/J2). Endpoint
         props compared raw (no param resolution), rel props resolved —
-        reference asymmetry (cypher_spec.rs:888-907)."""
+        reference asymmetry (cypher_spec.rs:888-907). A constrained
+        endpoint whose row is carried (``carry_a``/``carry_b``) is inner-
+        joined instead of semi-joined, adding ``__l<end>``/``__p<end>``."""
         e = self._edges_matching(p.rel.typ, p.rel.props, params)
+
+        def end(t: DataFrame, np: ast.NodePattern, key: str, carry: bool) -> DataFrame:
+            if np.label is None and not np.props:
+                return t
+            n = self._nodes_matching(np, None)
+            if not carry:
+                return t.join(n.select(F.col("id").alias(key)), key, "left_semi")
+            rows = n.select(
+                F.col("id").alias(key),
+                F.col("label").alias(f"__l{key[2:]}"),
+                F.col("properties").alias(f"__p{key[2:]}"),
+            )
+            return t.join(rows, key)  # ids are unique: same rows as the semi-join
 
         def orient(a_col: str, b_col: str) -> DataFrame:
             t = e.select(
                 F.col("id").alias("__r"), F.col(a_col).alias("__a"), F.col(b_col).alias("__b")
             )
-            lp, rp = p.left, p.right
-            if lp.label is not None or lp.props:
-                la = self._nodes_matching(lp, None).select(F.col("id").alias("__a"))
-                t = t.join(la, "__a", "left_semi")
-            if rp.label is not None or rp.props:
-                rb = self._nodes_matching(rp, None).select(F.col("id").alias("__b"))
-                t = t.join(rb, "__b", "left_semi")
-            return t
+            return end(end(t, p.left, "__a", carry_a), p.right, "__b", carry_b)
 
         trip = orient("src", "dst")
         if not p.rel.right:
@@ -233,13 +312,24 @@ class CypherExecutor:
             trip = trip.unionByName(orient("dst", "src"))
         return trip
 
-    def _expand_one_hop(self, b: _Binding, p: ast.PathPattern, params: dict[str, str]) -> None:
+    def _expand_one_hop(
+        self, b: _Binding, p: ast.PathPattern, params: dict[str, str], reads: set[str]
+    ) -> None:
         lv, rv, bv = p.left.var, p.rel.var, p.right.var
         # rel var colliding with a node var can never bind (kind mismatch)
         if rv is not None and (rv == lv or rv == bv):
             b.empty()
             return
-        trip = self._one_hop_triples(p, params)
+
+        def carries(var: str | None, np: ast.NodePattern) -> bool:
+            # only a constrained endpoint is joined with node rows at all
+            scanned = np.label is not None or bool(np.props)
+            return scanned and var is not None and var not in b.kinds and var in reads
+
+        # a self-loop variable (lv == bv) binds from the __b side below
+        carry_a = carries(lv, p.left) and lv != bv
+        carry_b = carries(bv, p.right)
+        trip = self._one_hop_triples(p, params, carry_a, carry_b)
         if lv is not None and bv is not None and lv == bv:
             trip = trip.filter(F.col("__a") == F.col("__b"))
 
@@ -258,11 +348,16 @@ class CypherExecutor:
         if conds:
             joined = b.df.join(trip, reduce(lambda x, y: x & y, conds), "inner")
         else:
-            joined = b.df.crossJoin(trip)
+            joined = b.product(trip)
         pat_labels = {"__a": p.left.label, "__r": p.rel.typ, "__b": p.right.label}
+        carried = {"__a": carry_a, "__b": carry_b}
         sel = [F.col(c) for c in b.df.columns]
         for var, (tcol, kind) in new_vars.items():
             sel.append(F.col(tcol).alias(_vcol(var)))
+            if carried.get(tcol):
+                sel.append(F.col(f"__l{tcol[2:]}").alias(_lcol(var)))
+                sel.append(F.col(f"__p{tcol[2:]}").alias(_pcol(var)))
+                b.carried.add(var)
             b.kinds[var] = kind
             b.labels[var] = pat_labels[tcol]
         b.df = joined.select(*sel)
@@ -301,94 +396,107 @@ class CypherExecutor:
         adj = adj.select(F.xxhash64("__u").alias("__u"), F.xxhash64("__v").alias("__v"))
         spark = self.graph.nodes.sparkSession
         tracked: list = []
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if max_hops <= 2:
-            # Short walks: one fused declarative plan instead of the hop
-            # loop. The loop shape costs 4 driver actions for a 2-hop
-            # walk (per-hop checkpoint + count, plus the final pin); here
-            # hop-1 = starts⋈adj, hop-2 = hop-1⋈adj, and the per-node
-            # BFS depth falls out of groupBy(start, node).min(depth) over
-            # the depth-tagged union — min over all ≤2-walks IS the
-            # first-reached depth, so the distinct→anti-join frontier
-            # bookkeeping is unnecessary. Single action (the result pin);
-            # Catalyst reuses the hop-1 exchange for the hop-2 probe and
-            # AQE picks broadcast sides at runtime.
-            seed = sh.select(
-                "__start", F.col("__start").alias("__node"), F.lit(0).alias("__depth")
-            )
-            h1 = (
-                sh.select("__start", F.col("__start").alias("__node"))
-                .join(adj, F.col("__node") == adj["__u"])
-                .select("__start", F.col("__v").alias("__node"))
-                .distinct()
-            )
-            frames = [seed, h1.withColumn("__depth", F.lit(1))]
-            if max_hops == 2:
-                h2 = (
-                    h1.join(adj, h1["__node"] == adj["__u"])
+        # a cancelled read (job tag) raises out of the hop loop: free its
+        # checkpoints on every exit, not only on success
+        try:
+            if max_hops <= 2:
+                # Short walks: one fused declarative plan instead of the hop
+                # loop. The loop shape costs 4 driver actions for a 2-hop
+                # walk (per-hop checkpoint + count, plus the final pin); here
+                # hop-1 = starts⋈adj, hop-2 = hop-1⋈adj, and the per-node
+                # BFS depth falls out of groupBy(start, node).min(depth) over
+                # the depth-tagged union — min over all ≤2-walks IS the
+                # first-reached depth, so the distinct→anti-join frontier
+                # bookkeeping is unnecessary. Single action (the result pin);
+                # Catalyst reuses the hop-1 exchange for the hop-2 probe and
+                # AQE picks broadcast sides at runtime.
+                seed = sh.select(
+                    "__start", F.col("__start").alias("__node"), F.lit(0).alias("__depth")
+                )
+                h1 = (
+                    sh.select("__start", F.col("__start").alias("__node"))
+                    .join(adj, F.col("__node") == adj["__u"])
                     .select("__start", F.col("__v").alias("__node"))
                     .distinct()
                 )
-                frames.append(h2.withColumn("__depth", F.lit(2)))
-            all_reached = (
-                reduce(lambda x, y: x.unionByName(y), frames)
-                .groupBy("__start", "__node")
-                .agg(F.min("__depth").alias("__depth"))
-            )
-        else:
-            # 3+ passes over the edge list: materialize the (src,dst)
-            # pairs once — re-deriving them per hop repeats the upstream
-            # scans — and run the classic frontier loop (the fused-plan
-            # trick is quadratic in plan size past a couple of hops).
-            adj = _tracked_checkpoint(adj, tracked)
-            # hop loop = several shuffle stages per hop on modest frames;
-            # size partitions from the data so task scheduling doesn't
-            # dominate (same lever as connected_components)
-            parts = int(max(8, adj.count() // 500_000))
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            try:
+                frames = [seed, h1.withColumn("__depth", F.lit(1))]
+                if max_hops == 2:
+                    h2 = (
+                        h1.join(adj, h1["__node"] == adj["__u"])
+                        .select("__start", F.col("__v").alias("__node"))
+                        .distinct()
+                    )
+                    frames.append(h2.withColumn("__depth", F.lit(2)))
+                all_reached = (
+                    reduce(lambda x, y: x.unionByName(y), frames)
+                    .groupBy("__start", "__node")
+                    .agg(F.min("__depth").alias("__depth"))
+                )
+            else:
+                # 3+ passes over the edge list: materialize the (src,dst)
+                # pairs once — re-deriving them per hop repeats the upstream
+                # scans — and run the classic frontier loop (the fused-plan
+                # trick is quadratic in plan size past a couple of hops).
+                adj = _tracked_checkpoint(adj, tracked)
+                # hop loop = several shuffle stages per hop on modest frames;
+                # size partitions from the data so task scheduling doesn't
+                # dominate (same lever as connected_components). Each shuffle
+                # is an explicit keyed repartition: the session conf is shared
+                # by concurrent queries, so it is never written here.
+                parts = int(max(8, adj.count() // 500_000))
+                pair = ["__start", "__node"]
                 frontier = _tracked_checkpoint(
-                    sh.select("__start", F.col("__start").alias("__node")), tracked
+                    sh.select("__start", F.col("__start").alias("__node")).repartition(
+                        parts, *pair
+                    ),
+                    tracked,
                 )
                 n_frontier = frontier.count()
                 seen = frontier
                 reached = [frontier.withColumn("__depth", F.lit(0))]
                 for d in range(1, max_hops + 1):
-                    # a small frontier broadcast against the edge list
-                    # means the hop never shuffles the adjacency; big
-                    # frontiers (dense traversals) fall back to a
-                    # shuffled join
-                    fr = F.broadcast(frontier) if n_frontier <= 300_000 else frontier
+                    # a small frontier broadcast against the edge list means
+                    # the hop never shuffles the adjacency; big frontiers
+                    # (dense traversals) join on co-partitioned keys
+                    if n_frontier <= 300_000:
+                        fr, ad = F.broadcast(frontier), adj
+                    else:
+                        fr = frontier.repartition(parts, "__node")
+                        ad = adj.repartition(parts, "__u")
                     nxt = _tracked_checkpoint(  # cut 8-deep iterative lineage
-                        fr.join(adj, fr["__node"] == adj["__u"])
+                        fr.join(ad, fr["__node"] == ad["__u"])
                         .select("__start", F.col("__v").alias("__node"))
+                        .repartition(parts, *pair)  # distinct and anti-join reuse it
                         .distinct()
-                        .join(seen, ["__start", "__node"], "left_anti"),
+                        .join(seen, pair, "left_anti"),
                         tracked,
                     )
                     n_frontier = nxt.count()
                     if n_frontier == 0:
                         break
                     reached.append(nxt.withColumn("__depth", F.lit(d)))
-                    seen = _tracked_checkpoint(seen.unionByName(nxt), tracked)
+                    seen = _tracked_checkpoint(
+                        seen.unionByName(nxt).repartition(parts, *pair), tracked
+                    )
                     frontier = nxt
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            all_reached = reduce(lambda x, y: x.unionByName(y), reached)
+                all_reached = reduce(lambda x, y: x.unionByName(y), reached)
 
-        # pin only the final (start, node) pairs and free the ~2/hop BFS
-        # checkpoints (frontier/seen/adjacency) they were built from —
-        # the binding table below stays lazy over this one small frame
-        pairs = (
-            all_reached.filter((F.col("__depth") >= min_hops) & (F.col("__depth") <= max_hops))
-            .join(eh, "__node")
-            .join(sh, "__start")
-            .select(F.col("__start_s").alias("__start"), F.col("__node_s").alias("__node"))
-            .localCheckpoint(eager=True)
-        )
-        _free_intermediates(spark, tracked)
+            # pin only the final (start, node) pairs and free the ~2/hop BFS
+            # checkpoints (frontier/seen/adjacency) they were built from —
+            # the binding table below stays lazy over this one small frame
+            pairs = (
+                all_reached.filter((F.col("__depth") >= min_hops) & (F.col("__depth") <= max_hops))
+                .join(eh, "__node")
+                .join(sh, "__start")
+                .select(F.col("__start_s").alias("__start"), F.col("__node_s").alias("__node"))
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            _free_intermediates(spark, tracked)
 
         lv, rv = p.left.var, p.right.var
+        if rv is not None:
+            b.drop_carried({rv})  # its binding is overwritten below
         conds: list[Column] = []
         if lv is not None and lv in b.kinds:
             if b.kinds[lv] != "node":
@@ -398,7 +506,7 @@ class CypherExecutor:
         if conds:
             joined = b.df.join(pairs, reduce(lambda x, y: x & y, conds), "inner")
         else:
-            joined = b.df.crossJoin(pairs)
+            joined = b.product(pairs)
         # right var OVERWRITES any prior binding, no consistency check
         # (reference cypher_spec.rs:847); rel var is never bound.
         keep = [c for c in b.df.columns]
@@ -487,74 +595,79 @@ class CypherExecutor:
                 return None
         return None
 
+    @classmethod
+    def _where_terms(cls, raw: str) -> list[tuple]:
+        """The recognized conjuncts of a WHERE: ``("id", lvar, op, rvar)``
+        or ``("prop", var, key, rhs, pred)``, ``pred(value, literal)``
+        building the row filter. Unsupported conjuncts are left out:
+        WHERE is fail-open (cypher_spec.rs:1140)."""
+        terms: list[tuple] = []
+        for c in cls._split_where_and(raw):
+            c = c.strip()
+            idc = cls._parse_id_compare(c)
+            if idc is not None:
+                terms.append(("id", *idc))
+                continue
+            for kw, col_pred in (
+                ("CONTAINS", lambda v, s: v.contains(F.lit(s))),
+                ("STARTS WITH", lambda v, s: v.startswith(F.lit(s))),
+                ("ENDS WITH", lambda v, s: v.endswith(F.lit(s))),
+            ):
+                m = cls._parse_str_pred(c, kw)
+                if m is not None:
+                    terms.append(("prop", *m, col_pred))
+                    break
+            else:
+                vpc = cls._parse_var_prop_comp(c)
+                if vpc is not None:
+                    var, prop, op, rhs = vpc
+                    terms.append(
+                        ("prop", var, prop, rhs, lambda v, s, op=op: compare_expr(v, s, op))
+                    )
+        return terms
+
     def _exec_where(self, b: _Binding, raw: str, params: dict[str, str]) -> None:
-        conjuncts = self._split_where_and(raw)
-        if not conjuncts:
+        terms = self._where_terms(raw)
+        if not terms:
             return
         df = b.df
         joined_vars: set[str] = set()
-
-        def ensure_props(var: str) -> None:
-            nonlocal df
-            if var in joined_vars:
-                return
-            n = self._nodes_hinted(b, var).select(
-                F.col("id").alias(f"__ex_{var}"), F.col("properties").alias(f"__pr_{var}")
-            )
-            df = df.join(n, _c(_vcol(var)) == _c(f"__ex_{var}"), "left")
-            joined_vars.add(var)
-
-        def prop_value(var: str, key: str) -> Column:
-            return F.coalesce(_c(f"__pr_{var}")[key], F.lit(""))  # missing prop → ""
-
         preds: list[Column] = []
-        for c in conjuncts:
-            c = c.strip()
-            idc = self._parse_id_compare(c)
-            if idc is not None:
-                lv, op, rv = idc
+        for term in terms:
+            if term[0] == "id":
+                _, lv, op, rv = term
                 if b.kinds.get(lv) == "node" and b.kinds.get(rv) == "node":
                     preds.append(compare_cols(_c(_vcol(lv)), _c(_vcol(rv)), op))
                 else:
                     preds.append(F.lit(False))  # unbound/non-node var drops the row
                 continue
-            matched = False
-            for kw, col_pred in (
-                ("CONTAINS", lambda v, s: v.contains(s)),
-                ("STARTS WITH", lambda v, s: v.startswith(s)),
-                ("ENDS WITH", lambda v, s: v.endswith(s)),
-            ):
-                m = self._parse_str_pred(c, kw)
-                if m is not None:
-                    var, prop, rhs = m
-                    val = resolve_param(rhs, params)
-                    if b.kinds.get(var) == "node":
-                        ensure_props(var)
-                        preds.append(
-                            _c(f"__ex_{var}").isNotNull() & col_pred(prop_value(var, prop), F.lit(val))
-                        )
-                    else:
-                        preds.append(F.lit(False))
-                    matched = True
-                    break
-            if matched:
-                continue
-            vpc = self._parse_var_prop_comp(c)
-            if vpc is not None:
-                var, prop, op, rhs = vpc
-                lit = resolve_param(rhs, params)
-                if b.kinds.get(var) == "node":
-                    ensure_props(var)
-                    preds.append(
-                        _c(f"__ex_{var}").isNotNull() & compare_expr(prop_value(var, prop), lit, op)
-                    )
-                else:
-                    preds.append(F.lit(False))
-                continue
-            # unsupported conjunct → fail-open, row kept (cypher_spec.rs:1140)
+            _, var, prop, rhs, pred = term
+            if b.kinds.get(var) == "node":
+                df, exists, props = self._node_props(b, df, var, joined_vars)
+                value = F.coalesce(props[prop], F.lit(""))  # missing prop → ""
+                preds.append(exists & pred(value, resolve_param(rhs, params)))
+            else:
+                preds.append(F.lit(False))
         if preds:
             df = df.filter(reduce(lambda x, y: x & y, preds))
         b.df = df.select(*[F.col(c) for c in b.df.columns])
+
+    def _node_props(
+        self, b: _Binding, df: DataFrame, var: str, joined: set[str]
+    ) -> tuple[DataFrame, Column, Column]:
+        """``df`` with node variable ``var``'s properties at hand: (frame,
+        row-exists column, properties column). A carried row is read in
+        place; otherwise the label slice is left-joined once per ``joined``
+        set, adding ``__nx_<var>``/``__np_<var>``."""
+        if var in b.carried:
+            return df, F.lit(True), _c(_pcol(var))
+        if var not in joined:
+            n = self._nodes_hinted(b, var).select(
+                F.col("id").alias(f"__nx_{var}"), F.col("properties").alias(f"__np_{var}")
+            )
+            df = df.join(n, _c(_vcol(var)) == _c(f"__nx_{var}"), "left")
+            joined.add(var)
+        return df, _c(f"__nx_{var}").isNotNull(), _c(f"__np_{var}")
 
     # ------------------------------------------------------- sort keys
     def _augment_keys(
@@ -572,21 +685,15 @@ class CypherExecutor:
                 col = _c(_vcol(v)) if v in b.kinds else F.lit("")
             elif isinstance(expr, ast.Prop):
                 if b.kinds.get(expr.var) == "node":
-                    if expr.var not in joined:
-                        n = self._nodes_hinted(b, expr.var).select(
-                            F.col("id").alias(f"__kx_{expr.var}"),
-                            F.col("properties").alias(f"__kp_{expr.var}"),
-                        )
-                        df = df.join(n, _c(_vcol(expr.var)) == _c(f"__kx_{expr.var}"), "left")
-                        joined.add(expr.var)
-                    col = F.coalesce(_c(f"__kp_{expr.var}")[expr.key], F.lit(""))
+                    df, _, props = self._node_props(b, df, expr.var, joined)
+                    col = F.coalesce(props[expr.key], F.lit(""))
                 else:
                     col = F.lit("")
             else:  # StrLit
                 col = F.lit(expr.value)
             df = df.withColumn(name, col)
         for v in joined:
-            df = df.drop(f"__kx_{v}", f"__kp_{v}")
+            df = df.drop(f"__nx_{v}", f"__np_{v}")
         return df, names
 
     @staticmethod
@@ -612,21 +719,27 @@ class CypherExecutor:
         # de-dup var list preserving order
         seen: set[str] = set()
         kept_vars = [v for v in kept_vars if not (v in seen or seen.add(v))]
-        b.df = df.select("__1", *[_c(_vcol(v)) for v in kept_vars])
+        carried = [v for v in kept_vars if v in b.carried]
+        b.df = df.select(
+            "__1",
+            *[_c(_vcol(v)) for v in kept_vars],
+            *[_c(c) for v in carried for c in (_lcol(v), _pcol(v))],
+        )
         b.kinds = {v: b.kinds[v] for v in kept_vars}
         b.labels = {v: b.labels.get(v) for v in kept_vars}
+        b.carried = set(carried)
 
     # ------------------------------------------------------------- RETURN
     def _project_item(
-        self, b: _Binding, df: DataFrame, item: ast.Expr, carry: list[str]
+        self, b: _Binding, df: DataFrame, item: ast.Expr, keys: list[str]
     ) -> DataFrame | None:
-        """One RETURN item → RESULT_SCHEMA columns (+ carried key cols +
-        __dkey distinct key). None ⇒ statically empty (unbound var etc.)."""
-        carry_cols = [_c(c) for c in carry]
+        """One RETURN item → RESULT_SCHEMA columns (+ the ORDER BY ``keys``
+        columns). None ⇒ statically empty (unbound var etc.)."""
+        key_cols = [_c(c) for c in keys]
 
         def out(kind: str, id_c, src_c, dst_c, label_c, props_c, info_c, base: DataFrame) -> DataFrame:
             return base.select(
-                *carry_cols,
+                *key_cols,
                 F.lit(kind).alias("kind"),
                 id_c.alias("id"),
                 src_c.alias("src"),
@@ -638,6 +751,9 @@ class CypherExecutor:
 
         if isinstance(item, ast.Var):
             kind = b.kinds.get(item.name)
+            if kind == "node" and item.name in b.carried:
+                v = item.name
+                return out("node", _c(_vcol(v)), _null_s(), _null_s(), _c(_lcol(v)), _c(_pcol(v)), _null_s(), df)
             if kind == "node":
                 # fresh aliases: the binding df derives from `nodes`, so raw
                 # column refs would be an ambiguous self-join
@@ -662,6 +778,10 @@ class CypherExecutor:
         if isinstance(item, ast.Prop):
             if b.kinds.get(item.var) != "node":
                 return None  # rel props not projectable (reference :1409-1418)
+            if item.var in b.carried:
+                val = _c(_pcol(item.var))[item.key]
+                j = df.filter(val.isNotNull())  # missing prop → no row
+                return out("info", _null_s(), _null_s(), _null_s(), _null_s(), _null_m(), val, j)
             n = self._nodes_hinted(b, item.var).select(
                 F.col("id").alias("__ni"), F.col("properties").alias("__np")
             )
@@ -918,6 +1038,47 @@ class CypherExecutor:
                 continue
             ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
             self.graph.remove_property(kind, ids, prop, known_label=b.labels.get(var))
+
+
+_MUTATIONS = (ast.Create, ast.Merge, ast.Delete, ast.SetClause, ast.RemoveClause)
+
+
+def _row_reads(clauses: list) -> list[set[str]]:
+    """Per clause, the variables whose node row (label or properties) a
+    later WHERE, ORDER BY or RETURN of the statement reads before the
+    next mutation clause, which drops every carried row. A statement
+    without RETURN ends in the dump of every bound variable; clauses
+    after a RETURN never run."""
+    def props(exprs) -> set[str]:
+        return {e.var for e in exprs if isinstance(e, ast.Prop)}
+
+    def rows(exprs) -> set[str]:
+        return props(exprs) | {e.name for e in exprs if isinstance(e, ast.Var)}
+
+    reads: set[str] = set()
+    if not any(isinstance(cl, ast.Return) for cl in clauses):
+        reads = {
+            np.var
+            for cl in clauses
+            if isinstance(cl, ast.Match)
+            for p in cl.patterns
+            for np in ((p.node,) if isinstance(p, ast.NodeOnly) else (p.left, p.right))
+            if np.var is not None
+        }
+    out: list[set[str]] = []
+    for cl in reversed(clauses):
+        out.append(reads)
+        if isinstance(cl, ast.Return):
+            reads = rows(cl.items) | props(e for e, _ in cl.order_by)
+        elif isinstance(cl, _MUTATIONS):
+            reads = set()
+        elif isinstance(cl, ast.Where):
+            terms = CypherExecutor._where_terms(cl.raw)
+            reads = reads | {t[1] for t in terms if t[0] == "prop"}
+        elif isinstance(cl, ast.With):
+            kept = {it.name for it in cl.items if isinstance(it, ast.Var)}
+            reads = (reads & kept) | props(e for e, _ in cl.order_by)
+    return out[::-1]
 
 
 def _common_label(b: _Binding, vars_: list[str]) -> str | None:

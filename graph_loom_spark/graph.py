@@ -97,8 +97,8 @@ def local_rows(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> 
 
 
 def _tracked_checkpoint(df: DataFrame, tracked: list) -> DataFrame:
-    """``localCheckpoint(eager=True)`` and record the pinned block's exact
-    RDD id in ``tracked``.
+    """``localCheckpoint`` eagerly and record the pinned block's exact RDD
+    id in ``tracked``.
 
     The checkpointed Dataset's analyzed plan is a ``LogicalRDD`` whose
     ``rdd`` field IS the persisted RDD, so its id keys
@@ -107,12 +107,16 @@ def _tracked_checkpoint(df: DataFrame, tracked: list) -> DataFrame:
     concurrent query's checkpoints safe: in a multi-query service the
     set-difference approach could free blocks some other in-flight
     operator had just pinned — local checkpoints are non-recomputable,
-    so that's a hard job failure, not a cache miss."""
-    out = df.localCheckpoint(eager=True)
-    try:
-        tracked.append(out._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:
-        pass  # tracking is best-effort; worst case the block stays pinned
+    so that's a hard job failure, not a cache miss.
+
+    The id is recorded before the materializing job runs: the RDD is
+    registered as persistent when it is marked for checkpointing, so a
+    job that fails or is cancelled (a timed-out read) would otherwise
+    leave an untracked, never-freed entry."""
+    out = df.localCheckpoint(eager=False)
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    tracked.append(rdd.id())
+    rdd.count()  # what eager=True runs
     return out
 
 

@@ -104,12 +104,13 @@ def serve_grpc(
     """Start the GraphQuery gRPC service on ``host:port``; returns the
     started ``grpc.Server`` (call ``.stop(grace)`` to shut down).
 
-    ``broker`` is the same single-writer QueryServer used by the HTTP/WS
-    layer, so all three APIs share one serialized mutation queue (V4) —
-    mirroring the reference, where every transport funnels into one mpsc
-    channel. The reference runs 2 tokio worker threads (grpc.rs:127-130);
-    ``max_workers=2`` mirrors that, though execution is serialized by the
-    broker lock anyway."""
+    ``broker`` is the same QueryServer used by the HTTP/WS layer, so all
+    three APIs share its reader–writer lock: mutations from any transport
+    are serialized (V4, where every transport funnels into one mpsc
+    channel), while read-only queries run side by side on the broker's
+    pool, and a timed-out read is cancelled. The reference runs 2 tokio
+    worker threads (grpc.rs:127-130); ``max_workers=2`` mirrors that, so
+    at most two gRPC calls wait on the broker at once."""
     _require_grpc()
 
     def execute(request: dict, context) -> dict:
@@ -122,9 +123,10 @@ def serve_grpc(
         query = request.get("query", "")
         if not query.strip():
             return error_response("missing query")
-        fut = broker._submit(query, request.get("params") or {}, bool(request.get("log")))
         try:
-            outcome = fut.result(timeout=broker.timeout_s)
+            outcome = broker.run(
+                query, request.get("params") or {}, bool(request.get("log")), broker.timeout_s
+            )
         except FutTimeout:
             context.abort(grpc.StatusCode.DEADLINE_EXCEEDED, "query timeout")
         except Exception as e:  # noqa: BLE001 — in-band error field

@@ -9,24 +9,31 @@ handler; outcomes aggregate counts and OR the mutated flag.
 from __future__ import annotations
 
 import os
+import threading
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from graph_loom_spark.cypher import ast
 from graph_loom_spark.cypher.ast import CypherError
 from graph_loom_spark.cypher.compiler import CypherExecutor
+from graph_loom_spark.cypher.parser import parse
 from graph_loom_spark.graph import PropertyGraph
 from graph_loom_spark.legacy import dsl
 from graph_loom_spark.result import QueryOutcome, ResultRow
 
-__all__ = ["CypherSession", "QueryOutcome", "ResultRow", "CypherError"]
+__all__ = ["CypherSession", "QueryOutcome", "ResultRow", "CypherError", "is_read_only"]
+
+_LOG_LOCK = threading.Lock()  # one append at a time: a server logs from several workers
 
 
-def log_query(query: str, outcome: QueryOutcome | None, error: str | None, log_dir: str) -> None:
+def log_query(
+    query: str, outcome: QueryOutcome | None, error: str | None, log_dir: str, dt_ms: float
+) -> None:
     """S11 query-log sink (query_interface.rs:28-52): append
-    ``timestamp | status`` + query text to ``queries_YYYYMMDD.log``."""
-    os.makedirs(log_dir, exist_ok=True)
-    path = os.path.join(log_dir, time.strftime("queries_%Y%m%d.log", time.gmtime()))
+    ``timestamp | status dt_ms=<latency>`` (the latency as server.rs:163
+    logs it) + query text to ``queries_YYYYMMDD.log``."""
     ts = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
     if error is None and outcome is not None:
         status = (
@@ -35,8 +42,12 @@ def log_query(query: str, outcome: QueryOutcome | None, error: str | None, log_d
         )
     else:
         status = f"ERR {error}"
-    with open(path, "a") as f:
-        f.write(f"{ts} | {status}\n{query.strip()}\n\n")
+    status += f" dt_ms={dt_ms:.0f}"
+    with _LOG_LOCK:
+        os.makedirs(log_dir, exist_ok=True)
+        path = os.path.join(log_dir, time.strftime("queries_%Y%m%d.log", time.gmtime()))
+        with open(path, "a") as f:
+            f.write(f"{ts} | {status}\n{query.strip()}\n\n")
 
 
 def _is_cypher(stmt: str, upper: str) -> bool:
@@ -121,12 +132,13 @@ class CypherSession:
         log_dir: str = "assets/logs",
     ) -> QueryOutcome:
         """``execute`` + the S11 log sink (reference execute_and_log)."""
+        t0 = time.perf_counter()
         try:
             outcome = self.execute(query, params)
         except Exception as e:
-            log_query(query, None, str(e), log_dir)
+            log_query(query, None, str(e), log_dir, (time.perf_counter() - t0) * 1000)
             raise
-        log_query(query, outcome, None, log_dir)
+        log_query(query, outcome, None, log_dir, (time.perf_counter() - t0) * 1000)
         return outcome
 
     def execute_df(self, query: str, params: dict[str, str] | None = None) -> DataFrame:
@@ -148,23 +160,57 @@ class CypherSession:
     def _route(
         self, stmt: str, params: dict[str, str] | None
     ) -> tuple[list[ResultRow], int, int, bool]:
-        upper = stmt.upper()
-        g = self.graph
-        if upper.startswith("MATCH (") and " MERGE " in upper:
-            return dsl.exec_cypher_match_merge(g, stmt)
-        if _is_cypher(stmt, upper):
-            df = CypherExecutor(g).execute(stmt, params)
+        run, _ = _dispatch(stmt)
+        return run(self.graph, params)
+
+
+_Handler = Callable[
+    [PropertyGraph, "dict[str, str] | None"], "tuple[list[ResultRow], int, int, bool]"
+]
+_READ_CLAUSES = (ast.Match, ast.Where, ast.With, ast.Return)
+# legacy DSL prefix -> (handler over the rest of the statement, only reads)
+_LEGACY: tuple[tuple[str, Callable, bool], ...] = (
+    ("CREATE NODE ", dsl.exec_create_node, False),
+    ("CREATE REL ", dsl.exec_create_rel, False),
+    ("MATCH NODE ", dsl.exec_match_node, True),
+    ("MATCH REL ", dsl.exec_match_rel, True),
+    ("DELETE NODE ", lambda g, rest: ([], dsl.exec_delete_node(g, rest), 0, True), False),
+    ("DELETE REL ", lambda g, rest: ([], 0, dsl.exec_delete_rel(g, rest), True), False),
+)
+
+
+def _dispatch(stmt: str) -> tuple[_Handler, bool]:
+    """The one routing table (query_interface.rs:96-117): the handler
+    that runs ``stmt`` on a graph, and whether it only reads — Cypher
+    whose parsed clauses are all MATCH/WHERE/WITH/RETURN, or a legacy
+    ``MATCH NODE``/``MATCH REL``. Raises ``CypherError`` for a Cypher
+    statement that does not parse and for unrecognized text."""
+    upper = stmt.upper()
+    if upper.startswith("MATCH (") and " MERGE " in upper:
+        return (lambda g, params: dsl.exec_cypher_match_merge(g, stmt)), False
+    if _is_cypher(stmt, upper):
+        clauses = parse(stmt)
+
+        def run_cypher(g: PropertyGraph, params: dict[str, str] | None):
+            df = CypherExecutor(g).execute(stmt, params, clauses)
             return _collect_result(df), 0, 0, _cypher_mutates(upper)
-        if upper.startswith("CREATE NODE "):
-            return dsl.exec_create_node(g, stmt[12:])
-        if upper.startswith("CREATE REL "):
-            return dsl.exec_create_rel(g, stmt[11:])
-        if upper.startswith("MATCH NODE "):
-            return dsl.exec_match_node(g, stmt[11:])
-        if upper.startswith("MATCH REL "):
-            return dsl.exec_match_rel(g, stmt[10:])
-        if upper.startswith("DELETE NODE "):
-            return [], dsl.exec_delete_node(g, stmt[12:]), 0, True
-        if upper.startswith("DELETE REL "):
-            return [], 0, dsl.exec_delete_rel(g, stmt[11:]), True
-        raise CypherError(f"unrecognized statement: {stmt}")
+
+        return run_cypher, all(isinstance(c, _READ_CLAUSES) for c in clauses)
+    for prefix, handler, reads in _LEGACY:
+        if upper.startswith(prefix):
+            rest = stmt[len(prefix) :]
+            return (lambda g, params: handler(g, rest)), reads
+    raise CypherError(f"unrecognized statement: {stmt}")
+
+
+def is_read_only(query: str) -> bool:
+    """True when no ``;``-part of ``query`` can change the graph, by the
+    routing of :func:`_dispatch`. Anything else is a write: a mutation,
+    the legacy ``MATCH … MERGE`` path, text that does not parse or is not
+    recognized, an empty query. A server may run read-only requests side
+    by side."""
+    stmts = [s.strip() for s in query.strip().split(";") if s.strip()]
+    try:
+        return bool(stmts) and all(_dispatch(s)[1] for s in stmts)
+    except Exception:  # it fails in execute; route it as a write
+        return False

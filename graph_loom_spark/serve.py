@@ -16,11 +16,22 @@ text as the body** and timeouts 504 "query timeout", matching
 server.rs handle_query; ``log`` defaults to true and routes through
 ``execute_and_log`` (the S11 query-log sink).
 
-Concurrency model parity: the reference funnels every API query through
-one mpsc channel onto a single engine thread (V4). Here a process-wide
-lock serializes query execution against the session — Spark provides the
-intra-query parallelism, the lock provides the reference's single-writer
-mutation safety.
+Concurrency model: the reference funnels every API query through one
+mpsc channel onto a single engine thread (V4), so a read waits behind
+every other request. Here only mutations are serialized. Requests run
+on a worker pool sized from the host's cores under a writer-preferring
+reader–writer lock: a request that ``interface.is_read_only`` accepts
+takes the shared side and runs beside other reads (Spark schedules
+their jobs side by side); every other request, and autosave, takes the
+exclusive side, so a write never overlaps a read or another write and
+keeps the reference's single-writer mutation safety. A waiting write
+blocks new reads, so a stream of reads cannot starve it.
+
+Every request's Spark jobs carry a job tag. When a read times out (504,
+or ``timeout`` on the WebSocket) its jobs are cancelled through that tag,
+so an abandoned read stops holding executors and the shared lock. A
+write is never cancelled: stopping it between two slice rewrites could
+leave the graph half-written.
 
 stdlib-only (ThreadingHTTPServer): no framework dependency; swap for any
 WSGI server in production — the handler is ~100 lines of protocol.
@@ -28,16 +39,77 @@ WSGI server in production — the handler is ~100 lines of protocol.
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import json
+import os
 import threading
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FutTimeout
+from concurrent.futures import wait as wait_futures
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from graph_loom_spark import ws as wsproto
-from graph_loom_spark.interface import CypherSession
+from graph_loom_spark.interface import CypherSession, is_read_only
 
 REPL_BANNER = "Graph-Loom REPL ready. Send queries as text.\n"
+
+
+class RWLock:
+    """Writer-preferring reader–writer lock: any number of holders of the
+    shared side, or one of the exclusive side. A writer that is waiting
+    keeps new readers out, so reads cannot starve it."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._readers = 0
+        self._writer = False
+        self._writers_waiting = 0
+
+    @contextlib.contextmanager
+    def shared(self):
+        with self._cond:
+            while self._writer or self._writers_waiting:
+                self._cond.wait()
+            self._readers += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._readers -= 1
+                if not self._readers:
+                    self._cond.notify_all()
+
+    @contextlib.contextmanager
+    def exclusive(self):
+        with self._cond:
+            self._writers_waiting += 1
+            try:
+                while self._writer or self._readers:
+                    self._cond.wait()
+            finally:
+                self._writers_waiting -= 1
+            self._writer = True
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._writer = False
+                self._cond.notify_all()
+
+
+def _cancel_until_done(sc, tag: str, fut: Future) -> None:
+    while True:
+        sc.cancelJobsWithTag(tag)
+        if wait_futures([fut], timeout=0.1).done:
+            return
+
+
+def _host_cores() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not on Linux
+        return os.cpu_count() or 1
 
 
 class QueryServer:
@@ -56,19 +128,37 @@ class QueryServer:
         self.timeout_s = timeout_s
         self.ws_timeout_s = ws_timeout_s  # server.rs:208 — WS gets 60 s
         self.log_dir = log_dir
-        self._lock = threading.Lock()  # V4 single-writer broker
-        self._pool = ThreadPoolExecutor(max_workers=1)
+        self._lock = RWLock()  # shared: reads; exclusive: writes, autosave
+        self._pool = ThreadPoolExecutor(max_workers=max(2, _host_cores()))
         self._dirty = False  # unsaved mutations since the last autosave
         self._autosave_stop: threading.Event | None = None
+        self._tags = itertools.count()
 
-    def _submit(self, query: str, params: dict[str, str], log: bool):
-        def run():
-            with self._lock:
+    def run(self, query: str, params: dict[str, str], log: bool, timeout_s: float):
+        """Execute one request on the pool and return its outcome; raises
+        ``concurrent.futures.TimeoutError`` after ``timeout_s``.
+
+        A read-only request (``interface.is_read_only``) takes the shared
+        side of the lock, any other the exclusive side. On timeout a read
+        is abandoned: dropped if it has not started, else its Spark jobs
+        are cancelled by its job tag until it ends (it may start another
+        job after the first cancel). A write is left to finish."""
+        read_only = is_read_only(query)
+        tag = f"gls-query-{next(self._tags)}"
+        abandoned = threading.Event()
+        sc = self._spark_context()
+
+        def work():
+            with self._lock.shared() if read_only else self._lock.exclusive():
+                if abandoned.is_set():  # timed out while it queued
+                    raise FutTimeout()
                 # dirty follows the graph's mutation counter, not the
                 # outcome's prefix-based ``mutated`` flag (which misses
                 # MATCH..SET and friends); a statement that fails after
                 # an earlier one mutated still leaves the graph dirty
                 before = self._graph_version()
+                if sc is not None:
+                    sc.addJobTag(tag)  # tags this worker thread's jobs
                 try:
                     if log:
                         return self.session.execute_and_log(
@@ -76,10 +166,27 @@ class QueryServer:
                         )
                     return self.session.execute(query, params)
                 finally:
+                    if sc is not None:
+                        sc.removeJobTag(tag)
                     if self._graph_version() != before:
                         self._dirty = True
 
-        return self._pool.submit(run)
+        fut = self._pool.submit(work)
+        try:
+            return fut.result(timeout=timeout_s)
+        except FutTimeout:
+            if read_only:
+                abandoned.set()
+                if not fut.cancel() and sc is not None:
+                    threading.Thread(
+                        target=_cancel_until_done, args=(sc, tag, fut), daemon=True
+                    ).start()
+            raise
+
+    def _spark_context(self):
+        # a session without a PropertyGraph (a test double) has no jobs
+        spark = getattr(getattr(self.session, "graph", None), "spark", None)
+        return None if spark is None else spark.sparkContext
 
     def _graph_version(self):
         # any session exposing execute()/execute_and_log() can be served;
@@ -94,9 +201,9 @@ class QueryServer:
         thread that, each tick, writes a versioned snapshot via
         ``PropertyGraph.save(path, versioned=True)`` IF the graph's
         mutation counter moved since the last save — idle sessions write
-        nothing. The save runs under the single-writer lock, so it never
-        races a mutation; a failed save keeps the dirty flag so the next
-        tick retries."""
+        nothing. The save takes the exclusive side of the lock, so it
+        never races a mutation or a read; a failed save keeps the dirty
+        flag so the next tick retries."""
         if self._autosave_stop is not None:
             raise RuntimeError("autosave already running")
         stop = threading.Event()
@@ -107,7 +214,7 @@ class QueryServer:
                 if not self._dirty:
                     continue
                 try:
-                    with self._lock:
+                    with self._lock.exclusive():
                         self._dirty = False
                         self.session.graph.save(path, versioned=True)
                 except Exception:
@@ -137,9 +244,8 @@ class QueryServer:
         log = payload.get("log")
         log = True if log is None else bool(log)  # reference defaults log=true
 
-        fut = self._submit(query, params, log)
         try:
-            outcome = fut.result(timeout=self.timeout_s)
+            outcome = self.run(query, params, log, self.timeout_s)
         except FutTimeout:
             return 504, "query timeout"
         except Exception as e:  # server.rs: 400 + error text for exec failures
@@ -154,9 +260,8 @@ class QueryServer:
         q = text.strip()
         if not q:
             return None
-        fut = self._submit(q, {}, log=True)
         try:
-            outcome = fut.result(timeout=self.ws_timeout_s)
+            outcome = self.run(q, {}, True, self.ws_timeout_s)
         except FutTimeout:
             return "timeout"
         except Exception as e:

@@ -61,12 +61,10 @@ def test_near_dup_and_multi_pattern_have_no_cartesian(spark):
     for name in ["emb_near_dup", "cypher_multi_pattern", "events_asof_join"]:
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
-        # the only tolerated nested-loop join is the Cypher executor's
-        # 1-row binding-table seed (Range(0,1) — the reference's
-        # `rows = vec![{}]`); anything else is a real blow-up
-        bnlj = plan.count("BroadcastNestedLoopJoin")
-        seed = plan.count("Range (0, 1, step=1")
-        assert bnlj <= seed, f"{name}: non-seed nested-loop join\n{plan[:2000]}"
+        # no nested-loop join at all: the Cypher executor seeds its
+        # binding table with the first pattern's frame instead of
+        # cross-joining a 1-row unit (the reference's `rows = vec![{}]`)
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}\n{plan[:2000]}"
 
 
 def test_layout_step_com_is_single_row_broadcast_not_cartesian(spark):

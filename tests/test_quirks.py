@@ -172,3 +172,24 @@ def test_var_length_shortest_depth_only(session):
     out = session.execute('MATCH (s:V {name:"a"})-[:E*1..2]->(t:V) RETURN t')
     names = sorted(r.properties["name"] for r in out.rows)
     assert names == ["b", "c"]  # c once, not twice
+
+
+def test_var_length_hop_loop_past_two_hops(session):
+    """J4 past two hops runs the frontier loop (seen-set BFS): each node
+    is emitted once, at its first depth, and only if that depth is in
+    range; the start node is depth 0 even when a cycle returns to it."""
+    for name in "abcde":
+        session.execute(f'CREATE (n:V {{name:"{name}"}})')
+    for src, dst in ("ab", "bc", "cd", "de", "ac", "ea"):
+        session.execute(
+            f'MATCH (x:V {{name:"{src}"}}), (y:V {{name:"{dst}"}}) CREATE (x)-[:E]->(y)'
+        )
+
+    def reached(rng):
+        out = session.execute(f'MATCH (s:V {{name:"a"}})-[:E*{rng}]->(t:V) RETURN t.name')
+        return sorted(r.info for r in out.rows)
+
+    assert reached("1..3") == ["b", "c", "d", "e"]
+    assert reached("2..3") == ["d", "e"]
+    assert reached("3..8") == ["e"]
+    assert reached("") == ["b", "c", "d", "e"]
